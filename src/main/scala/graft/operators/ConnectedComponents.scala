@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Connected components over an undirected edge list — the clustering step a
   * dedup pipeline needs between "near-dup PAIRS" (Jaccard/MinHash/SimHash
@@ -9,9 +10,23 @@ import org.apache.spark.sql.functions._
   * components of the pair graph, and the canonical survivor is each
   * component's minimum id.
   *
-  * Algorithm: large-star / small-star alternation (Kiveris et al.,
-  * "Connected Components in MapReduce and Beyond", SoCC'14). Each round
-  * applies two edge-rewriting operations:
+  * Algorithm: the input is canonicalized once (u >= v, distinct,
+  * checkpointed), and the scalar aggregate that fingerprints its non-loop
+  * edges also counts all of its rows, self-loops included. That row count
+  * picks one of two paths:
+  *
+  *   - up to `SingleTaskMaxRows` (2^20, measured — see its comment), ONE
+  *     task labels the whole graph: the checkpoint is coalesced to a single
+  *     partition and a union-find over the sorted distinct ids keeps the
+  *     smaller root on union, so each root is its component's minimum id.
+  *     No shuffle, no loop; the rounds count is 0. The catalog's and the
+  *     benchmark's dedup graphs (tens to hundreds of edges up to sf0.1)
+  *     all take this path;
+  *   - above it, large-star / small-star alternation (Kiveris et al.,
+  *     "Connected Components in MapReduce and Beyond", SoCC'14).
+  *
+  * Both give identical labels (spec-pinned differentially). Each star
+  * round applies two edge-rewriting operations:
   *
   *   - large-star(u): let m = min(Γ(u) ∪ {u}); replace every edge to a
   *     STRICTLY LARGER neighbor v with (v, m) — large nodes get re-hung off
@@ -27,17 +42,23 @@ import org.apache.spark.sql.functions._
   * near-clique dedup cluster still converges in ~2 rounds, so the common
   * case pays nothing for the worst-case guarantee.
   *
-  * Scale shape (the 100 TB contract): each round is two groupBy-min
-  * aggregates plus two self-equi-joins on vertex id — no all-pairs step, no
-  * driver-side data; intermediate edge sets are `distinct`-bounded by the
-  * current edge count. The per-round convergence check is one scalar
-  * aggregate (count + order-independent xxhash64 checksum — an agg, not a
-  * collect). `localCheckpoint` truncates lineage each round so the plan
-  * stays O(1) deep instead of growing by four joins per iteration; the
-  * checkpoint blocks are freed by the ContextCleaner once superseded.
-  * Convergence telemetry (rounds, final star-edge count) is logged to
-  * stderr per invocation so benchmark rounds expose diameter drift in the
-  * corpus instead of discovering it via a timeout.
+  * Scale shape: the single-task path holds O(rows) longs in one task, at
+  * most 40 MiB at the bound (see `SingleTaskMaxRows`); a labeling fed back
+  * as edges (`merge`), whose singletons are all self-loops, counts them
+  * against the bound too, so a large one takes the star loop.
+  * Above the bound the star loop keeps the 100 TB contract: each round is two
+  * groupBy-min aggregates plus two self-equi-joins on vertex id — no
+  * all-pairs step, no driver-side data; intermediate edge sets are
+  * `distinct`-bounded by the current edge count. The per-round convergence
+  * check is one scalar aggregate (count + order-independent xxhash64
+  * checksum — an agg, not a collect). `localCheckpoint` truncates lineage
+  * each round so the plan stays O(1) deep instead of growing by four joins
+  * per iteration; the checkpoint blocks are freed by the ContextCleaner
+  * once superseded.
+  * Telemetry is logged to stderr per invocation — the path taken, with the
+  * edge count, or the rounds and final star-edge count — so benchmark
+  * rounds expose diameter drift in the corpus instead of discovering it
+  * via a timeout.
   */
 object ConnectedComponents {
 
@@ -96,7 +117,9 @@ object ConnectedComponents {
     * grows linearly with the untouched mass (every label re-converged
     * per batch) while fold's grows sublinearly (one anti-join scan):
     * 1.6× faster at 10M untouched labels, 2.3× at 30M, widening with
-    * scale.
+    * scale. That crossover was measured when every [[run]] took the star
+    * loop; small label sets now take the single-task path, and the
+    * crossover has not been re-measured since.
     *
     * Output: (id, component, touched) — `touched` = 1 on rows the star
     * rounds re-derived (members of an affected component, plus vertices
@@ -211,22 +234,158 @@ object ConnectedComponents {
   }
 
   /** As [[run]], additionally returning the number of large+small-star
-    * rounds executed until the edge-set fixpoint (telemetry / specs).
+    * rounds executed until the edge-set fixpoint (telemetry / specs); 0
+    * when the graph took the single-task path.
     */
   def runCounted(edges: DataFrame, src: String, dst: String,
-                 maxIters: Int = 30): (DataFrame, Int) = {
+                 maxIters: Int = 30): (DataFrame, Int) =
+    runBounded(edges, src, dst, maxIters, SingleTaskMaxRows)
+
+  /** Canonical row count (distinct edges, self-loops included) up to which
+    * [[run]] labels in one task. Measured on a 4-core box at local[4]
+    * (JobSession), random graphs of n rows over n vertices, labeling plus a
+    * noop write, median of 3 (1 from 2^22):
+    *
+    *   rows    single task   star loop (rounds)
+    *   10^3       0.32 s        3.74 s (5)
+    *   10^4       0.26 s        3.39 s (6)
+    *   10^5       0.49 s        5.51 s (6)
+    *   2^20       2.05 s       24.96 s (7)
+    *   2^21       4.54 s       49.88 s (7)
+    *   2^22      11.48 s      107.95 s (7)
+    *   10^7      34.83 s      260.26 s (7)
+    *
+    * The single task wins by 7-13x at every size, so speed sets no bound
+    * below 10^7; memory does. The task's arrays are sized from the row
+    * count: two endpoint longs and two id-array longs per row, plus an int
+    * parent per distinct vertex (at most two per row), so at most 40 bytes
+    * per row, 40 MiB at 2^20. That figure is arithmetic on the array sizes,
+    * not a measured heap peak. It assumes Spark's default 1 GiB executor,
+    * whose user memory is about 290 MB ((1 GiB - 300 MB reserved) x 0.4):
+    * 2^20 stays well inside it, while 2^22 would take more than half.
+    */
+  private val SingleTaskMaxRows = 1L << 20
+
+  /** [[runCounted]] with the path-selection bound as a parameter: the
+    * star-loop specs pass a negative bound to reach the loop on small
+    * graphs.
+    */
+  private[graft] def runBounded(edges: DataFrame, src: String, dst: String,
+                                maxIters: Int,
+                                singleTaskMaxRows: Long): (DataFrame, Int) = {
+    requireLongIds(edges, src, dst)
     // ONE materialization of the (often expensive) upstream pipeline that
     // produced `edges` — a dedup pair generator here is a multi-join
     // inverted index, and the round-6 shape re-ran it twice by anchoring
     // two separate checkpoints on it (once for the vertex universe, once
     // for the working edge set). Canonical (u >= v) orientation, SELF-LOOPS
-    // KEPT so isolated vertices survive into the vertex scan below.
+    // KEPT so isolated vertices survive into the labeling.
     val canon = edges.select(
         greatest(col(src), col(dst)).as("u"),
         least(col(src), col(dst)).as("v"))
       .distinct()
       .localCheckpoint(true)
+    // small-star's contract: strictly (u > v)-oriented working set
+    val loopFree = col("u") =!= col("v")
+    val e = canon.where(loopFree)
+    // one job: the row count the single task would hold, and the star
+    // loop's starting fingerprint of `e` (as `fingerprint(e)` computes it)
+    val r = canon.agg(
+      count(lit(1)),
+      count(when(loopFree, lit(1))),
+      sum(when(loopFree,
+        xxhash64(col("u"), col("v")).cast("decimal(38,0)")))).head()
+    val (rows, cnt) = (r.getLong(0), r.getLong(1))
+    if (rows <= singleTaskMaxRows) {
+      System.err.println(
+        s"[graft] ConnectedComponents: single task ($cnt edges, $rows rows)")
+      (unionFindLabels(canon, rows.toInt), 0)
+    } else starLoop(canon, e, cnt,
+      Option(r.getDecimal(2)).getOrElse(java.math.BigDecimal.ZERO), maxIters)
+  }
 
+  /** The single-task union-find reads vertices as longs, and every caller
+    * keys on long doc ids: anything else fails here, naming the column,
+    * instead of inside an encoder. `merge`/`fold` reach this with their
+    * union columns (`__u`, `__v`), which `unionByName` has already widened.
+    */
+  private def requireLongIds(df: DataFrame, cols: String*): Unit =
+    cols.foreach { c =>
+      val t = df.schema(c).dataType
+      if (t != LongType)
+        throw new IllegalArgumentException(
+          s"ConnectedComponents: id column `$c` must be bigint, " +
+            s"got ${t.simpleString}")
+    }
+
+  // order-independent fingerprint of the edge set: fixpoint when a full
+  // large+small-star round leaves (count, Σ xxhash64(u,v)) unchanged.
+  // DECIMAL(38) because a BIGINT sum of 64-bit hashes overflows silently;
+  // a colliding non-equal set would terminate one round early — with a
+  // 2^-64-per-round probability that is not a practical failure mode.
+  private def fingerprint(df: DataFrame): (Long, java.math.BigDecimal) = {
+    val r = df.agg(
+      count(lit(1)),
+      sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).head()
+    (r.getLong(0),
+      Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
+  }
+
+  /** Single-task path: every canonical edge (self-loops included, so every
+    * vertex is seen) goes to one partition — a coalesce, no shuffle — and a
+    * union-find labels it there, in arrays sized from canon's `rows`.
+    * Vertex index = rank in the sorted distinct id array, so keeping the
+    * smaller root on union leaves each component's minimum id at its root;
+    * find halves paths as it walks. An
+    * all-NULL input edge is the one canon row with a NULL `u`, and it yields
+    * a (NULL, NULL) row, as the star loop's vertex scan does.
+    */
+  private def unionFindLabels(canon: DataFrame, rows: Int): DataFrame =
+    canon.coalesce(1).mapPartitions { it =>
+      var nullEdge = false
+      val u = new Array[Long](rows)
+      val v = new Array[Long](rows)
+      // canon is a checkpoint, so it holds exactly the `rows` counted
+      var m = 0
+      it.foreach { r =>
+        if (r.isNullAt(0)) nullEdge = true
+        else { u(m) = r.getLong(0); v(m) = r.getLong(1); m += 1 }
+      }
+      val ids = new Array[Long](2 * m)
+      System.arraycopy(u, 0, ids, 0, m)
+      System.arraycopy(v, 0, ids, m, m)
+      java.util.Arrays.sort(ids)
+      var n = 0
+      for (i <- ids.indices)
+        if (n == 0 || ids(i) != ids(n - 1)) {
+          ids(n) = ids(i)
+          n += 1
+        }
+      val parent = Array.range(0, n)
+      def find(x: Int): Int = {
+        var a = x
+        while (parent(a) != a) {
+          parent(a) = parent(parent(a))
+          a = parent(a)
+        }
+        a
+      }
+      for (i <- 0 until m) {
+        val a = find(java.util.Arrays.binarySearch(ids, 0, n, u(i)))
+        val b = find(java.util.Arrays.binarySearch(ids, 0, n, v(i)))
+        if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      }
+      Iterator.range(0, n).map(i => Row(ids(i), ids(find(i)))) ++
+        (if (nullEdge) Iterator.single(Row(null, null)) else Iterator.empty)
+    }(Encoders.row(StructType(Seq(
+      StructField("id", LongType), StructField("component", LongType)))))
+
+  /** The large/small-star loop from `e0` = canon's non-loop edges, whose
+    * fingerprint (`cnt0`, `sum0`) the caller already took.
+    */
+  private def starLoop(canon: DataFrame, e0: DataFrame, cnt0: Long,
+                       sum0: java.math.BigDecimal,
+                       maxIters: Int): (DataFrame, Int) = {
     // every vertex mentioned anywhere in the input: the star fixpoint drops
     // isolated vertices (self-loops, singletons), which must still appear
     // in the output labeled as their own component. Lazily derived from the
@@ -235,22 +394,6 @@ object ConnectedComponents {
     val vertices = canon.select(col("u").as("id"))
       .unionByName(canon.select(col("v").as("id")))
       .distinct()
-
-    // small-star's contract: strictly (u > v)-oriented working set
-    var e = canon.where(col("u") =!= col("v"))
-
-    // order-independent fingerprint of the edge set: fixpoint when a full
-    // large+small-star round leaves (count, Σ xxhash64(u,v)) unchanged.
-    // DECIMAL(38) because a BIGINT sum of 64-bit hashes overflows silently;
-    // a colliding non-equal set would terminate one round early — with a
-    // 2^-64-per-round probability that is not a practical failure mode.
-    def fingerprint(df: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = df.agg(
-        count(lit(1)),
-        sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).head()
-      (r.getLong(0),
-        Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
-    }
 
     // large-star: m = min(Γ(u) ∪ {u}); every strictly-larger neighbor v of
     // u is re-hung as (v, m). Output stays (bigger, smaller)-oriented
@@ -282,7 +425,9 @@ object ConnectedComponents {
         .distinct()
     }
 
-    var (prevCnt, prevSum) = fingerprint(e)
+    var e = e0
+    var prevCnt = cnt0
+    var prevSum = sum0
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
@@ -300,7 +445,7 @@ object ConnectedComponents {
       // (ADVICE r11) instead of holding rounds-many edge copies until the
       // ContextCleaner sweeps. Round 0's `e` is a lazy Filter over the
       // canon checkpoint, which the release helper no-ops on — canon
-      // itself stays live for the `vertices` scan below.
+      // itself stays live for the `vertices` scan.
       graft.ext.Caches.releaseLocalCheckpoint(e)
       converged = cnt == prevCnt && sm.compareTo(prevSum) == 0
       e = next

@@ -158,6 +158,15 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
     ConnectedComponents.run(edges.toDF("a", "b"), "a", "b")
       .as[(Long, Long)].collect().toMap
 
+  // the star loop, whatever the edge count: a negative bound rules out the
+  // single-task path, so these specs keep checking the loop above the bound
+  private def starLoop(edges: Seq[(Long, Long)],
+                       maxIters: Int = 30): (Map[Long, Long], Int) = {
+    val (labels, rounds) = ConnectedComponents.runBounded(
+      edges.toDF("a", "b"), "a", "b", maxIters, singleTaskMaxRows = -1L)
+    (labels.as[(Long, Long)].collect().toMap, rounds)
+  }
+
   test("a long chain needs transitive propagation, not one hop") {
     // diameter-7 path: label 1 must travel the whole chain
     val chain = (1L to 7L).map(i => (i, i + 1))
@@ -182,9 +191,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
     // an 8-vertex chain needs ~4 large/small-star rounds (incl. the
     // fixpoint-confirming one); capping at 2 must refuse, not mislabel
     val chain = (1L to 7L).map(i => (i, i + 1))
-    intercept[IllegalStateException] {
-      ConnectedComponents.run(chain.toDF("a", "b"), "a", "b", maxIters = 2)
-    }
+    intercept[IllegalStateException](starLoop(chain, maxIters = 2))
   }
 
   test("a 120-vertex chain converges in O(log n) rounds, not O(diameter)") {
@@ -192,9 +199,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
     // artifact (boilerplate with incremental counters) in a 100 TB dedup
     // graph. Large/small-star must label it correctly in ~log2(n) rounds.
     val chain = (1L to 119L).map(i => (i, i + 1))
-    val (labels, rounds) =
-      ConnectedComponents.runCounted(chain.toDF("a", "b"), "a", "b")
-    val comp = labels.as[(Long, Long)].collect().toMap
+    val (comp, rounds) = starLoop(chain)
     assert(comp.keySet === (1L to 120L).toSet)
     assert(comp.values.toSet === Set(1L))
     assert(rounds <= 10, s"expected O(log n) convergence, took $rounds rounds")
@@ -280,11 +285,92 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
       (13L, 20L), // bridge: both chains are one component rooted at 10
       (40L, 40L), // self-loop singleton
       (50L, 51L))
-    val comp = components(edges)
+    val comp = starLoop(edges)._1
     assert((10L to 13L).forall(comp(_) === 10L))
     assert((20L to 22L).forall(comp(_) === 10L))
     assert(comp(40L) === 40L)
     assert(comp(50L) === 50L && comp(51L) === 50L)
+  }
+
+  test("single-task union-find and the star loop give equal labels") {
+    def singleTask(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val (labels, rounds) = ConnectedComponents.runBounded(
+        edges.toDF("a", "b"), "a", "b", 30, singleTaskMaxRows = Long.MaxValue)
+      assert(rounds === 0)
+      val rows = labels.as[(Long, Long)].collect()
+      assert(rows.map(_._1).distinct.length === rows.length) // one per vertex
+      rows.toMap
+    }
+    def random(seed: Int): Seq[(Long, Long)] = {
+      // sparse graph over ids that straddle zero and reach both extremes,
+      // so the signed order of the sorted-id ranks is what picks the root
+      val rnd = new scala.util.Random(seed)
+      val ids = Seq.fill(150)(rnd.nextLong() >> rnd.nextInt(64)) ++
+        Seq(Long.MinValue, Long.MaxValue, 0L)
+      Seq.fill(180)((ids(rnd.nextInt(ids.length)),
+        ids(rnd.nextInt(ids.length))))
+    }
+    val shapes = Seq(
+      "chain" -> (1L to 119L).map(i => (i + 1, i)),
+      "bridged clusters" -> Seq((10L, 11L), (11L, 12L), (20L, 21L),
+        (21L, 22L), (22L, 20L), (12L, 22L), (50L, 51L)),
+      "self-loop singletons" -> Seq((40L, 40L), (7L, 7L), (3L, 4L)),
+      "duplicate and reversed edges" ->
+        Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 2L), (9L, 8L), (8L, 9L)),
+      "no non-loop edges" -> Seq((5L, 5L), (-2L, -2L), (5L, 5L))) ++
+      (1 to 4).map(seed => s"random seed $seed" -> random(seed))
+    for ((name, edges) <- shapes) {
+      val (loop, rounds) = starLoop(edges)
+      assert(singleTask(edges) === loop, name)
+      assert(loop.keySet === edges.flatMap(e => Seq(e._1, e._2)).toSet, name)
+      assert(rounds >= 1, name)
+    }
+  }
+
+  test("run takes the star loop when the row count is above the bound") {
+    // 7 distinct non-loop edges plus a self-loop: 8 canonical rows, which
+    // is what the single task would hold
+    val edges = ((1L to 7L).map(i => (i, i + 1)) :+ ((9L, 9L))).toDF("a", "b")
+    def rounds(bound: Long): Int =
+      ConnectedComponents.runBounded(edges, "a", "b", 30, bound)._2
+    assert(rounds(8L) === 0)
+    assert(rounds(7L) > 0)
+    assert(ConnectedComponents.runCounted(edges, "a", "b")._2 === 0)
+  }
+
+  test("self-loops count against the bound: bound+1 of them take the loop") {
+    // a labeling fed back as edges is mostly (id, id) singletons; with no
+    // non-loop edge at all, 5 of them must still leave a bound of 4
+    val loops = (1L to 5L).map(i => (i * 10, i * 10)).toDF("a", "b")
+    def run(bound: Long): (Map[Long, Long], Int) = {
+      val (labels, rounds) =
+        ConnectedComponents.runBounded(loops, "a", "b", 30, bound)
+      (labels.as[(Long, Long)].collect().toMap, rounds)
+    }
+    val (loopLabels, loopRounds) = run(4L)
+    assert(loopRounds >= 1)
+    assert(loopLabels === (1L to 5L).map(i => (i * 10, i * 10)).toMap)
+    assert(run(5L) === ((loopLabels, 0)))
+  }
+
+  test("non-bigint id columns are refused up front, naming the column") {
+    val ints = Seq((1, 2), (2, 3)).toDF("a", "b")
+    val e = intercept[IllegalArgumentException] {
+      ConnectedComponents.run(ints.withColumn("b", col("b").cast("long")),
+        "a", "b")
+    }
+    assert(e.getMessage.contains("`a`") && e.getMessage.contains("int"))
+    // merge unions its inputs first: int batch ids widen to bigint and
+    // label as usual, while double ids widen the union column to double
+    val labels = Seq((1L, 1L)).toDF("id", "component")
+    val merged = ConnectedComponents.merge(labels, "id", "component",
+      ints, "a", "b").as[(Long, Long)].collect().toMap
+    assert(merged === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+    val doubles = Seq((1.0, 2.0)).toDF("a", "b")
+    val m = intercept[IllegalArgumentException] {
+      ConnectedComponents.merge(labels, "id", "component", doubles, "a", "b")
+    }
+    assert(m.getMessage.contains("`__u`") && m.getMessage.contains("double"))
   }
 }
 
