@@ -1,6 +1,9 @@
 #!/bin/bash
 # Run a graft main class against the compiled classes + Spark jars without
 # sbt's startup overhead. Usage: scripts/run.sh graft.Verify <args...>
+# JAVA_EXTRA: whitespace-separated JVM flags placed before the class name,
+# e.g. JAVA_EXTRA="-Dspark.eventLog.enabled=true -Dspark.eventLog.dir=/tmp/ev"
+# or JAVA_EXTRA="-XX:StartFlightRecording=filename=run.jfr"
 set -e
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 # GRAFT_RUN_CWD: run from elsewhere (e.g. an sf1 bench dir so the
@@ -25,4 +28,4 @@ OPENS="$OPENS --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 exec java $OPENS -Xmx${SPARK_DRIVER_MEM:-24g} \
   -XX:ReservedCodeCacheSize=512m \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" "$@"
+  $JAVA_EXTRA -cp "$CP" "$@"

@@ -183,6 +183,7 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.jobs.JobSession.CodegenConf)
       // ContextCleaner frees broadcast/shuffle state only after a driver GC
       // collects the weak references; the default periodicGC interval (30 min)
       // exceeds the whole bench, so 52 queries x 3 runs of broadcasts pile up

@@ -15,6 +15,7 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.jobs.JobSession.CodegenConf)
       // same driver-heap guards as graft.Bench: one session runs the whole
       // catalog, and the SQL status store's default retention (~1000
       // executions) otherwise accumulates every query's execution graph

@@ -40,6 +40,11 @@ object Pipeline {
     * On a real cluster the same overlap fills the tail of every stage
     * with another job's tasks; job descriptions stay correct because
     * Spark's are thread-local.
+    *
+    * The user mart's `travel_array` is built with `strictOrder = true`:
+    * each route lists its stops in (datetime, city) order on any
+    * partitioning, where the reference's `collect_list` follows the
+    * upstream exchange's order.
     */
   def run(spark: SparkSession, eventsPath: String, geoPath: String,
           outBase: String, date: String, maxDistanceKm: Double,
@@ -51,7 +56,8 @@ object Pipeline {
     val eventsAtDate = spark.read.parquet(s"$eventsPath/date=$date")
     val marts: Seq[(String, () => Unit)] = Seq(
       ("user_mart", () =>
-        Sink.writePartitionedSorted(UserMartJob.transform(events, geo),
+        Sink.writePartitionedSorted(
+          UserMartJob.transform(events, geo, strictOrder = true),
           s"$outBase/user_mart", "act_city", Seq("user_id"))),
       ("zone_mart", () =>
         Sink.writePartitionedSorted(ZoneMartJob.transform(events, geo),

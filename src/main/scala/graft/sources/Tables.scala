@@ -214,24 +214,6 @@ object Tables {
     }
   }
 
-  /** events with `ts` in whatever PHYSICAL encoding this sfDir shipped —
-    * the testdata has carried two vintages: INT64 TIMESTAMP(NANOS) read as
-    * a raw long (rounds 1–6) and plain TIMESTAMP(MICROS) read as a
-    * timestamp (round 7+). Callers must branch on the scanned type like
-    * [[events]] does; use [[events]] for the normalized TIMESTAMP view.
-    */
-  def eventsRaw(spark: SparkSession, d: String): DataFrame = read(spark, d, "events")
-
-  /** Date-partitioned events scan (SURVEY §2 S3). The reference reads
-    * `date=YYYY-MM-DD` partition directories
-    * (`/root/reference/src/scripts/project_step_3.py:13-16`); the synthetic
-    * testdata ships one flat parquet, so this materializes the same
-    * `event_date=` Hive layout once per sfDir (under the JVM temp dir, where
-    * Spark already spills) and returns a scan whose `event_date` is a REAL
-    * partition column: an equality filter on it prunes directories at plan
-    * time — `PartitionFilters` in the scan node, zero data files read for
-    * other days — rather than filtering rows at runtime.
-    */
   /** Bucketed copies of orders and customer, both bucketed (and sorted) on
     * their custkey into `buckets` buckets — the co-located-join device: both
     * sides arrive hash-partitioned on the join key at plan time, so the
@@ -282,6 +264,16 @@ object Tables {
     (spark.table("graft_orders_bkt"), spark.table("graft_customer_bkt"))
   }
 
+  /** Date-partitioned events scan (SURVEY §2 S3). The reference reads
+    * `date=YYYY-MM-DD` partition directories
+    * (`/root/reference/src/scripts/project_step_3.py:13-16`); the synthetic
+    * testdata ships one flat parquet, so this materializes the same
+    * `event_date=` Hive layout once per sfDir (under the JVM temp dir, where
+    * Spark already spills) and returns a scan whose `event_date` is a REAL
+    * partition column: an equality filter on it prunes directories at plan
+    * time — `PartitionFilters` in the scan node, zero data files read for
+    * other days — rather than filtering rows at runtime.
+    */
   def eventsPartitioned(spark: SparkSession, d: String): DataFrame = {
     val scratch = ensureScratch(
       s"graft_events_by_date_${contentKey(s"$d/events.parquet")}") { staging =>

@@ -11,6 +11,7 @@ trait SparkTestBase {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    .config(graft.jobs.JobSession.CodegenConf)
     .getOrCreate()
 }
 
